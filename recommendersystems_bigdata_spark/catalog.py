@@ -28,6 +28,8 @@ TABLES = (
 # stay far under the broadcast threshold at test scale).
 BROADCAST_DIMS = ("region", "nation")
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one corpus table. ``name`` must be in :data:`TABLES`.
@@ -38,13 +40,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     .nanosAsLong`` and truncate to microseconds ourselves — the exact
     semantics DuckDB applies with ``CAST(ts AS TIMESTAMP)``, so oracle
     comparisons line up. The conversion is a cheap codegen'd projection;
-    pushdown on the remaining columns is unaffected.
+    pushdown on the remaining columns is unaffected. The flag is scoped to
+    the read: the resolved relation keeps ``ts`` as bigint, so the session
+    value is restored as soon as ``spark.read.parquet`` returns.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        saved = spark.conf.get(NANOS_AS_LONG, None)
+        spark.conf.set(NANOS_AS_LONG, "true")
+        try:
+            raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        finally:
+            if saved is None:
+                spark.conf.unset(NANOS_AS_LONG)
+            else:
+                spark.conf.set(NANOS_AS_LONG, saved)
         # Schema-aware: only the corpus's TIMESTAMP(NANOS) files surface ts
         # as a raw bigint under nanosAsLong; an events table written with
         # ordinary µs timestamps (e.g. one of our own sinks, or a user's

@@ -120,7 +120,7 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     )
-    return run_to_memory(joined.select("l_id", "l_user", "r_id"), "append")
+    return run_to_memory(joined.select("l_id", "l_user", "r_id"), "append", sf_dir)
 
 
 @query(
@@ -158,4 +158,4 @@ def q_stream_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    return run_to_memory(deduped, "append")
+    return run_to_memory(deduped, "append", sf_dir)

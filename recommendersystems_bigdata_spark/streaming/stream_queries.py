@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from recommendersystems_bigdata_spark.tmpdirs import scratch_dir
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -43,31 +44,35 @@ _STREAM_SRC: dict[str, tuple[str, StructType]] = {}
 # any window and emits nothing.
 N_STREAM_CHUNKS = 4
 
-# Scale-adaptive state-partition count for the availableNow drains
-# (round 12, guide §2.2 — partitions ∝ bytes, never a constant tuned to
-# one machine). A stateful streaming operator claims ONE state store per
-# shuffle partition per micro-batch, and the default HDFS-backed provider
-# writes + fsyncs a delta file per store per batch, so the per-batch fixed
-# cost is linear in `spark.sql.shuffle.partitions` REGARDLESS of data —
-# measured at sf0.1 (scripts/stream_profile.py): state-store commit time
-# dominates addBatch while total state is 40–50k rows, and a default
-# 200-partition session pays 200 store commits × batches × (up to 4
-# stores for a stream-stream join) to manage kilobytes. The drain
-# therefore sizes state partitions from the bytes that will actually
-# stream through: total chunked-source bytes / 32 MB, floored at 8 —
-# growing without bound as the corpus grows (at 100 TB the derived count
-# exceeds any session default and the session value governs via the
-# min() in run_to_memory), env-overridable for deployments that know
-# their state cardinality. Partition COUNT is invisible to results:
-# rows hash to stores by key, and within-key arrival order (which
-# decides keep-first dedup) rides the per-batch single-file map order,
-# not the reducer count — pinned by the oracle/hash checks either way.
-STREAM_SHUFFLE_ENV = "SPARK_GRAFT_STREAM_SHUFFLE"
-_STREAM_STATE_BYTES_PER_PARTITION = 32 * 1024 * 1024
-# Set by read_events_stream to the partition count derived for the source
-# it just prepared; consumed by run_to_memory (drains are synchronous and
-# single-threaded, so "the last source prepared" is the one draining).
-_LAST_STREAM_PARTITIONS: list[int] = [0]
+# State-partition count for the availableNow drains. A stateful streaming
+# operator claims ONE state store per shuffle partition per micro-batch,
+# and the default HDFS-backed provider writes + fsyncs a delta file per
+# store per batch, so the per-batch fixed cost is linear in the partition
+# count REGARDLESS of data (measured at sf0.1 with scripts/stream_profile.py:
+# state-store commit time dominates addBatch while total state is 40–50k
+# rows). Each store is also one task, so too few stores serialise the
+# per-batch state work (Python state functions, join buffers) on one core.
+# The drain therefore sizes its state partitions from the bytes that will
+# actually stream through and nothing else: one store per 512 KB of
+# chunked source, at least 1, at most the session's
+# `spark.sql.shuffle.partitions` (the session value is the cap, never
+# raised; there is no override). 512 KB is read off a sweep of 1/2/4/8
+# stores on 4 CPUs: at sf0.01 (0.2 MB streamed) the drains are
+# commit-bound and 1 store is fastest; at sf0.1 (1.8 MB) the stateful
+# Python and stream-stream join keys are fastest at 4 stores, 2x faster
+# than at 1. The count grows with the corpus, so at 100 TB the session
+# value governs. Partition COUNT is invisible to results: rows hash to
+# stores by key, and within-key arrival order (which decides keep-first
+# dedup) rides the per-batch single-file map order, not the reducer count
+# — pinned by tests/test_streaming.py's partition-invariance tests.
+_STREAM_STATE_BYTES_PER_PARTITION = 512 * 1024
+
+
+def state_partitions(total_bytes: int, session_n: int) -> int:
+    """State stores per stateful operator for a drain of ``total_bytes``:
+    one per 512 KB, at least 1, capped at ``session_n``."""
+    derived = -(-total_bytes // _STREAM_STATE_BYTES_PER_PARTITION)
+    return min(session_n, max(1, derived))
 
 
 def _chunked_events_dir(spark: SparkSession, sf_dir: str) -> tuple[str, StructType]:
@@ -130,6 +135,12 @@ def _chunked_events_dir(spark: SparkSession, sf_dir: str) -> tuple[str, StructTy
     return _STREAM_SRC[key]
 
 
+def chunked_events_bytes(spark: SparkSession, sf_dir: str) -> int:
+    """Bytes a drain of ``sf_dir``'s events streams: the chunked copy's size."""
+    src, _ = _chunked_events_dir(spark, sf_dir)
+    return sum(os.path.getsize(p) for p in _glob.glob(os.path.join(src, "part-*")))
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the chunked events copy, one file per micro-batch.
 
@@ -139,16 +150,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twins.
     """
     src, schema = _chunked_events_dir(spark, sf_dir)
-    env = os.environ.get(STREAM_SHUFFLE_ENV)
-    if env:
-        _LAST_STREAM_PARTITIONS[0] = int(env)
-    else:
-        total_bytes = sum(
-            os.path.getsize(p) for p in _glob.glob(os.path.join(src, "part-*"))
-        )
-        _LAST_STREAM_PARTITIONS[0] = max(
-            8, -(-total_bytes // _STREAM_STATE_BYTES_PER_PARTITION)
-        )
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -157,25 +158,21 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Drain a stream into a memory sink with availableNow; return the result.
+def drain_to_memory(stream_df: DataFrame, output_mode: str, sf_dir: str) -> StreamingQuery:
+    """Drain a stream of ``sf_dir``'s events into a memory sink with
+    availableNow; return the terminated query (its progress stays readable).
 
-    State partitioning: `spark.sql.shuffle.partitions` is captured by a
-    streaming query at start and becomes its state-store partition count
-    for life, so the drain starts under min(session value, the
-    scale-derived count from read_events_stream) and restores the session
-    conf immediately after — never raising it above what the session
-    chose, only refusing to spread kilobytes of state over hundreds of
-    per-batch store commits (see STREAM_SHUFFLE_ENV note above)."""
+    `spark.sql.shuffle.partitions` is captured by a streaming query at
+    start and becomes its state-store partition count for life, so the
+    drain starts under ``state_partitions`` of the chunked source's bytes
+    and restores the session conf immediately after."""
     spark = stream_df.sparkSession
-    name = "mem_" + uuid.uuid4().hex[:12]
-    ckpt = scratch_dir("ckpt_" + name)
     conf_key = "spark.sql.shuffle.partitions"
     session_n = int(spark.conf.get(conf_key))
-    derived = _LAST_STREAM_PARTITIONS[0]
-    n = min(session_n, derived) if derived else session_n
-    if n != session_n:
-        spark.conf.set(conf_key, str(n))
+    n = state_partitions(chunked_events_bytes(spark, sf_dir), session_n)
+    name = "mem_" + uuid.uuid4().hex[:12]
+    ckpt = scratch_dir("ckpt_" + name)
+    spark.conf.set(conf_key, str(n))
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -187,9 +184,19 @@ def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
         )
         q.awaitTermination()
     finally:
-        if n != session_n:
-            spark.conf.set(conf_key, str(session_n))
-    return spark.table(name)
+        spark.conf.set(conf_key, str(session_n))
+    return q
+
+
+def run_to_memory(stream_df: DataFrame, output_mode: str, sf_dir: str) -> DataFrame:
+    """Drain a stream of ``sf_dir``'s events into a memory sink with
+    availableNow; return the sink's table.
+
+    Each stateful operator runs with ``state_partitions`` stores: one per
+    512 KB of ``sf_dir``'s chunked events, at least 1, at most the session's
+    `spark.sql.shuffle.partitions`, which is restored after the drain."""
+    q = drain_to_memory(stream_df, output_mode, sf_dir)
+    return stream_df.sparkSession.table(q.name)
 
 
 @query(
@@ -224,7 +231,7 @@ def q_stream_watermark_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("w_start"), "event_type", "n_events", "total_value")
     )
-    return run_to_memory(agg, "append")
+    return run_to_memory(agg, "append", sf_dir)
 
 
 @query(
@@ -254,7 +261,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    return run_to_memory(agg, "complete")
+    return run_to_memory(agg, "complete", sf_dir)
 
 
 @query(
@@ -310,7 +317,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
     pairs = joined.select("l_id", "l_user", "r_id")
-    return run_to_memory(pairs, "append")
+    return run_to_memory(pairs, "append", sf_dir)
 
 
 @query("q_stream_foreach_batch_sink")
@@ -401,7 +408,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_memory(counted, "update")
+    return run_to_memory(counted, "update", sf_dir)
 
 
 @query(
@@ -460,4 +467,4 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_to_memory(agg, "append")
+    return run_to_memory(agg, "append", sf_dir)

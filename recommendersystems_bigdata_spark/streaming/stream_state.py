@@ -170,7 +170,7 @@ def q_stream_tws_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    drained = run_to_memory(milestones, "append")
+    drained = run_to_memory(milestones, "append", sf_dir)
     return drained.select("user_id", "milestone_n", "ts").orderBy(
         "user_id", "milestone_n"
     )

@@ -33,7 +33,8 @@ from recommendersystems_bigdata_spark.session import get_spark  # noqa: E402
 
 # table -> {column: offset unit}. The unit is a round power of ten above
 # the sf0.1 key range so copies never collide (and stays correct for
-# smaller source SFs).
+# smaller source SFs). Around sf10 the keys reach the units; main()
+# refuses such a source instead of writing colliding copies.
 OFFSETS = {
     "customer": {"c_custkey": 1_000_000},
     "supplier": {"s_suppkey": 1_000_000},
@@ -65,6 +66,13 @@ def main() -> None:
         print(f"{t}: verbatim")
     for t, offs in OFFSETS.items():
         base = load_table(spark, src, t)
+        maxes = base.agg(*[F.max(c).alias(c) for c in offs]).first()
+        for col, unit in offs.items():
+            if maxes[col] is not None and maxes[col] >= unit:
+                raise SystemExit(
+                    f"{t}.{col}: max key {maxes[col]} is not below its offset "
+                    f"unit {unit}; replica copies would collide"
+                )
         copies = base.crossJoin(
             spark.range(k).select(F.col("id").alias("_copy"))
         )

@@ -395,3 +395,122 @@ def test_stateful_queries_under_rocksdb_state_store(spark, sf_dir, key):
         f"{key}: RocksDB state store changed the emitted set "
         f"({len(baseline)} vs {len(under_rocksdb)} rows)"
     )
+
+
+# --- state-partition count of the availableNow drains ------------------------
+
+def test_state_partitions_one_per_unit_floor_1_session_cap():
+    from recommendersystems_bigdata_spark.streaming import stream_queries as sq
+
+    unit = sq._STREAM_STATE_BYTES_PER_PARTITION
+    assert unit == 512 * 1024
+    assert sq.state_partitions(0, 8) == 1
+    assert sq.state_partitions(unit, 8) == 1
+    assert sq.state_partitions(unit + 1, 8) == 2
+    assert sq.state_partitions(5 * unit, 8) == 5
+    for total_bytes in (0, 1, unit, unit + 1, 7 * unit, 100 * unit, 10**15):
+        for session_n in (1, 2, 8, 200):
+            n = sq.state_partitions(total_bytes, session_n)
+            assert 1 <= n <= session_n, (total_bytes, session_n, n)
+
+
+def _write_enlarged_events(sf_dir: str, out_dir, copies: int) -> str:
+    """A corpus directory whose events table is ``copies`` copies of
+    ``sf_dir``'s, with distinct event ids; returns its path."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    span = pc.max(ev["event_id"]).as_py() + 1
+    parts = [
+        ev.set_column(
+            ev.schema.get_field_index("event_id"),
+            "event_id",
+            pc.add(ev["event_id"], pa.scalar(i * span, ev["event_id"].type)),
+        )
+        for i in range(copies)
+    ]
+    out_dir.mkdir()
+    pq.write_table(pa.concat_tables(parts), str(out_dir / "events.parquet"))
+    return str(out_dir)
+
+
+def test_drain_derives_count_from_its_own_source(spark, sf_dir, monkeypatch, tmp_path):
+    """The state-partition count reaches the drain explicitly, from the
+    source it drains: preparing a second, larger source after the first
+    must not change the first drain's count, and the drain leaves the
+    session's shuffle-partition setting as it found it."""
+    from recommendersystems_bigdata_spark.streaming import stream_queries as sq
+
+    sf_b = _write_enlarged_events(sf_dir, tmp_path / "b", copies=8)
+    conf_key = "spark.sql.shuffle.partitions"
+    session_n = int(spark.conf.get(conf_key))
+    bytes_a = sq.chunked_events_bytes(spark, sf_dir)
+    bytes_b = sq.chunked_events_bytes(spark, sf_b)
+    # A derives 2 stores; B, several times larger, derives more.
+    monkeypatch.setattr(sq, "_STREAM_STATE_BYTES_PER_PARTITION", -(-bytes_a // 2))
+    count_a = sq.state_partitions(bytes_a, session_n)
+    count_b = sq.state_partitions(bytes_b, session_n)
+    assert count_a == 2 and count_b > count_a, (count_a, count_b)
+
+    ev_a = sq.read_events_stream(spark, sf_dir)
+    sq.read_events_stream(spark, sf_b)
+    agg = (
+        ev_a.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day"), "event_type")
+        .count()
+    )
+    q = sq.drain_to_memory(agg, "append", sf_dir)
+
+    assert spark.conf.get(conf_key) == str(session_n)
+    used = {so["numShufflePartitions"] for so in q.lastProgress["stateOperators"]}
+    assert used == {count_a}, (used, count_a, count_b)
+
+
+def _canonical_hash(df) -> str:
+    import hashlib
+
+    from recommendersystems_bigdata_spark.oracle import canonicalize
+
+    csv = canonicalize(df.toPandas()).to_csv(index=False)
+    return hashlib.sha256(csv.encode()).hexdigest()
+
+
+_SLOW_PARTITION_KEYS = (
+    "q_stream_static_join",
+    "q_stream_session_window",
+    "q_stream_stream_left_outer",
+    "q_stream_dedup_within_watermark",
+    "q_stream_sliding_topk",
+    "q_stream_tws_milestones",
+)
+
+
+@pytest.mark.parametrize(
+    "key",
+    ["q_stream_watermark_tumble", "q_stream_stream_join", "q_stream_stateful_count"]
+    + [pytest.param(k, marks=pytest.mark.slow) for k in _SLOW_PARTITION_KEYS],
+)
+def test_stream_result_invariant_to_state_partition_count(
+    spark, sf_dir, key, monkeypatch
+):
+    """Partition COUNT is invisible to results: a drain-backed key gives
+    the same canonical hash with one state store per operator (what the
+    sf0.001 corpus derives) and with the session cap of stores."""
+    from recommendersystems_bigdata_spark import registry
+    from recommendersystems_bigdata_spark.streaming import stream_queries as sq
+
+    registry.load_all()
+    fn = registry.QUERIES[key]
+    session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    total_bytes = sq.chunked_events_bytes(spark, sf_dir)
+    assert session_n > 1
+    assert sq.state_partitions(total_bytes, session_n) == 1
+
+    one_store = _canonical_hash(fn(spark, sf_dir))
+    monkeypatch.setattr(sq, "_STREAM_STATE_BYTES_PER_PARTITION", 1)
+    assert sq.state_partitions(total_bytes, session_n) == session_n
+    capped = _canonical_hash(fn(spark, sf_dir))
+
+    assert capped == one_store, f"{key}: result changed with {session_n} state stores"
