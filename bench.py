@@ -5,8 +5,7 @@ Runs the headline query set at ``$SPARK_GRAFT_SF_DIR`` (default
 JSON line::
 
     {"metric": "headline_wall_sec", "value": N, "unit": "sec",
-     "queries": {"q_agg_pricing_summary": sec, ...}, "sf": 0.1,
-     "runs": [{...}, {...}, {...}]}
+     "queries": {"q_agg_pricing_summary": sec, ...}, "sf": 0.1}
 
 Each query is materialized through the noop sink (full execution, no
 driver-side row transfer — the same discipline a cluster benchmark uses).
@@ -16,21 +15,11 @@ Single runs on this box show ±25% cross-session noise with ~0.6%
 within-session spread (BENCH_LOCAL_r04.json), so medians-of-3 is the
 round-over-round comparison unit.
 
-MEASUREMENT BUG FIX (round 11, documented in OPTIMIZATION_r11.md): the
-raw per-series timings used to ride the printed line as a ``runs``
-field. With 16+ headline queries that pushed the single JSON line past
-2000 characters, and the round driver captures only a bounded tail of
-bench stdout — BENCH_r09.json and BENCH_r10.json both show the line
-truncated mid-stream and ``"parsed": null``, i.e. the driver got NO
-bench numbers for two rounds. The printed line now carries only the
-contracted fields (metric/value/unit/queries/sf) plus the compact
-round-over-round subtotals, and the raw series go to a sidecar file
-(``$SPARK_GRAFT_BENCH_RUNS_PATH``, default ``BENCH_LOCAL_runs.json``
-next to this script) instead of stdout. ``tests/test_bench_contract.py``
-pins the printed-line budget so headline growth can't silently re-break
-the driver's parse. Timing methodology (noop sink, 1 warm-up + 3 timed
-series, medians) is UNCHANGED — the old ``value``/``queries`` numbers
-remain directly comparable.
+Only those contracted fields are printed, because the JSON line is read
+back from a bounded tail (~2000 chars) of bench stdout; the raw series go
+to a sidecar file (``$SPARK_GRAFT_BENCH_RUNS_PATH``, default
+``BENCH_LOCAL_runs.json`` next to this script).
+``tests/test_bench_contract.py`` pins the printed-line budget.
 """
 
 from __future__ import annotations
@@ -47,34 +36,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from recommendersystems_bigdata_spark import registry  # noqa: E402
 from recommendersystems_bigdata_spark.session import get_spark  # noqa: E402
 
-# One per engine subsystem (BASELINE.md): scan+hash-agg, multi-way join,
-# window top-k, vector similarity, sessionization, text explode+agg,
-# recommender feature build — plus the LLM-pipeline surface (minhash
-# signature build, banded LSH dedup join, text quality scoring) so the
-# mandated extension operators carry a wall-time budget too, and (round 7)
-# the iterative driver-loop path: q_dedup_clusters runs the large-star/
-# small-star contraction kernel to a fixpoint, so multi-round shuffle +
-# localCheckpoint cost — invisible to every one-shot query above — is
-# perf-tracked round-over-round. Round 9 adds q_seq_user_signature: the
-# per-entity ordered-history materialization (collect_list + array_sort)
-# whose cost profile — aggregation-state payload, not key cardinality —
-# no other headline query exercises; late round 9 adds
-# q_inv_fifo_allocation: the cumulative-interval self-join (one window
-# lineage consumed by three plan branches under ReusedExchange), the
-# shape whose checkpoint-placement regression the 10× probe caught —
-# kept perf-visible so it can't silently return. The last round-9
-# addition is q_concentration_curve: the two-pass distributed global
-# rank (range shuffle + Arrow mapInPandas local index + broadcast
-# offsets, ranks.global_ntile) — the SinglePartition-eliminating path
-# under §2.AR/§2.AX whose Python-boundary cost no JVM-only headline
-# query exercises. The round-9 closing addition is q_emb_norm_audit:
-# the JVM higher-order-function fold over 64-wide float arrays
-# (§2.BN's codegen'd lambda loop), the array-HOF execution profile no
-# other headline query touches. Round 10 adds q_fingerprint_by_month:
-# the full-fact single-pass checksum manifest (§2.BW) — per-row
-# decimal(38,0) multiply-mod arithmetic inside a map-side-combined
-# hash aggregate, the wide-decimal scan profile (replication audits
-# run at full table scale, so its wall time is a first-class budget).
+# One query per engine subsystem or physical shape (BASELINE.md): scans,
+# joins, windows, similarity, text, the recommender features, the
+# LLM-pipeline operators, iterative fixpoint loops, the Python/Arrow
+# boundary, higher-order array functions and recursive CTEs.
 HEADLINE = (
     "q_agg_pricing_summary",
     "q_join_star_multiway",
@@ -92,13 +57,6 @@ HEADLINE = (
     "q_concentration_curve",
     "q_emb_norm_audit",
     "q_fingerprint_by_month",
-    # Round 11 widens the physical-shape coverage per the round-9
-    # judge's standing suggestion: q_survival_km_curve is the
-    # recursive-CTE (UnionLoop) life-table fold, q_search_bm25ish the
-    # hit-bounded inverted-index join — the two newest shapes that had
-    # no perf visibility — and q_rep_bigram_census is the §2.CC
-    # explode → (doc, gram) partial-agg text pipeline, the
-    # corpus-token-linear profile the screen family runs at full scale.
     "q_survival_km_curve",
     "q_search_bm25ish",
     "q_rep_bigram_census",
@@ -110,13 +68,24 @@ N_SERIES = 3
 # are a few MB, so 8 partitions beat the engine's 32-way default (less task
 # scheduling, same parallelism where it matters — the parquet scan). The
 # 100 TB analogue is the same rule in reverse: partitions ∝ shuffle bytes.
-BENCH_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "8"))
+BENCH_SHUFFLE_PARTITIONS = 8
 
 
 def _time_once(fn, spark, sf_dir: str) -> float:
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
+
+
+def _payload(medians: dict[str, float], sf: float | None) -> dict:
+    """The printed line: contracted fields only (see the module docstring)."""
+    return {
+        "metric": "headline_wall_sec",
+        "value": round(sum(medians.values()), 3),
+        "unit": "sec",
+        "queries": medians,
+        "sf": sf,
+    }
 
 
 def main() -> None:
@@ -145,47 +114,7 @@ def main() -> None:
         name: round(statistics.median(r[name] for r in runs), 3) for name in HEADLINE
     }
 
-    # r1-r3 benched only the first 7 queries; the LLM-surface ops were added
-    # in round 4, the iterative q_dedup_clusters in round 7, the sequence
-    # signature early in round 9, the FIFO interval join late in round 9
-    # and the distributed-rank concentration curve at round-9 end. The
-    # subtotals keep round-over-round comparisons honest without
-    # changing the contracted top-level fields: compare r3_comparable_7q_sec
-    # across all rounds, r6_comparable_10q_sec against BENCH_r0{5,6}.json's
-    # "value", r8_comparable_11q_sec against BENCH_r0{7,8}.json's "value",
-    # r9_comparable_13q_sec / r9_comparable_14q_sec against
-    # BENCH_LOCAL_r09.json's earlier "value" columns (the embedding-fold
-    # q_emb_norm_audit joined 15th at round-9 end), and "value" itself
-    # only from round 10 on.
-    legacy_7q = round(sum(medians[n] for n in HEADLINE[:7]), 3)
-    legacy_10q = round(sum(medians[n] for n in HEADLINE[:10]), 3)
-    legacy_11q = round(sum(medians[n] for n in HEADLINE[:11]), 3)
-    legacy_12q = round(sum(medians[n] for n in HEADLINE[:12]), 3)
-    legacy_13q = round(sum(medians[n] for n in HEADLINE[:13]), 3)
-    legacy_14q = round(sum(medians[n] for n in HEADLINE[:14]), 3)
-    # round 10 added the 16th headline (q_fingerprint_by_month): compare
-    # r9_comparable_15q_sec against BENCH_r09.json's "value"; "value"
-    # itself is comparable from round 10 on.
-    legacy_15q = round(sum(medians[n] for n in HEADLINE[:15]), 3)
-    # round 11 added the 17th..19th headlines (survival/search/bigram):
-    # compare r10_comparable_16q_sec against BENCH_r10.json's "value";
-    # "value" itself is comparable from round 11 on.
-    legacy_16q = round(sum(medians[n] for n in HEADLINE[:16]), 3)
-    payload = {
-        "metric": "headline_wall_sec",
-        "value": round(sum(medians.values()), 3),
-        "unit": "sec",
-        "queries": medians,
-        "sf": sf,
-        "r3_comparable_7q_sec": legacy_7q,
-        "r6_comparable_10q_sec": legacy_10q,
-        "r8_comparable_11q_sec": legacy_11q,
-        "r9_comparable_12q_sec": legacy_12q,
-        "r9_comparable_13q_sec": legacy_13q,
-        "r9_comparable_14q_sec": legacy_14q,
-        "r9_comparable_15q_sec": legacy_15q,
-        "r10_comparable_16q_sec": legacy_16q,
-    }
+    payload = _payload(medians, sf)
     # Raw series to the sidecar (never stdout — see the module-doc note on
     # the driver's bounded tail capture).
     runs_path = os.environ.get(

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from recommendersystems_bigdata_spark.session import conf_scope
+
 TABLES = (
     "region",
     "nation",
@@ -47,15 +49,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        saved = spark.conf.get(NANOS_AS_LONG, None)
-        spark.conf.set(NANOS_AS_LONG, "true")
-        try:
+        with conf_scope(spark, NANOS_AS_LONG, "true"):
             raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        finally:
-            if saved is None:
-                spark.conf.unset(NANOS_AS_LONG)
-            else:
-                spark.conf.set(NANOS_AS_LONG, saved)
         # Schema-aware: only the corpus's TIMESTAMP(NANOS) files surface ts
         # as a raw bigint under nanosAsLong; an events table written with
         # ordinary µs timestamps (e.g. one of our own sinks, or a user's

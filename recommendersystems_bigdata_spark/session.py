@@ -10,6 +10,8 @@ and the shuffle-partition default is sized for the test scale factors
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -20,12 +22,30 @@ from pyspark.sql import SparkSession
 # cardinality at executor memory; RocksDB keeps state off-heap on local
 # disk with incremental checkpointing — the 100 TB-cardinality choice
 # (SCALE.md §2 streaming). It is a per-query SQL conf read at stream
-# start, so it can also be flipped at runtime via
-# ``spark.conf.set(ROCKSDB_PROVIDER_CONF, ROCKSDB_PROVIDER_CLASS)``.
+# start, so it can also be flipped for one query via
+# ``conf_scope(spark, ROCKSDB_PROVIDER_CONF, ROCKSDB_PROVIDER_CLASS)``.
 ROCKSDB_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 ROCKSDB_PROVIDER_CLASS = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set the session conf ``key`` to ``value`` for the ``with`` body only.
+
+    On exit the prior value is restored, or the key is unset if the session
+    had none, so no query leaks conf into the next one on a shared session.
+    """
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
 
 
 def get_spark(

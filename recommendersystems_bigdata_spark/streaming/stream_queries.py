@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from recommendersystems_bigdata_spark.catalog import load_table
 from recommendersystems_bigdata_spark.registry import query
+from recommendersystems_bigdata_spark.session import conf_scope
 
 # Chunked-copy cache: sf_dir -> (src_dir, schema). One materialization per
 # corpus directory serves all seven streaming queries in a session.
@@ -172,8 +173,7 @@ def drain_to_memory(stream_df: DataFrame, output_mode: str, sf_dir: str) -> Stre
     n = state_partitions(chunked_events_bytes(spark, sf_dir), session_n)
     name = "mem_" + uuid.uuid4().hex[:12]
     ckpt = scratch_dir("ckpt_" + name)
-    spark.conf.set(conf_key, str(n))
-    try:
+    with conf_scope(spark, conf_key, str(n)):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -183,8 +183,6 @@ def drain_to_memory(stream_df: DataFrame, output_mode: str, sf_dir: str) -> Stre
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, str(session_n))
     return q
 
 

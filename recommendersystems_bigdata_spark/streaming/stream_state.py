@@ -32,6 +32,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from recommendersystems_bigdata_spark.registry import query
+from recommendersystems_bigdata_spark.session import (
+    ROCKSDB_PROVIDER_CLASS,
+    ROCKSDB_PROVIDER_CONF,
+    conf_scope,
+)
 from recommendersystems_bigdata_spark.streaming.stream_queries import (
     read_events_stream,
     run_to_memory,
@@ -79,7 +84,7 @@ def q_stream_tws_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batches, are sorted by the harness's (ts, event_id) total
     order, and counted in one pass — O(rows) work, O(users) state, no
     shuffle beyond the groupBy key exchange every stateful operator
-    needs. The RocksDB provider is set per-query because the driver's
+    needs. The RocksDB provider is scoped to this query's drain because a
     default session does not carry the engine's tuned conf.
 
     Uses transformWithStateInPandas when google.protobuf is importable
@@ -87,10 +92,6 @@ def q_stream_tws_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed evidence exercises the applyInPandasWithState path — the
     kernel and oracle are identical for both.
     """
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     ev = read_events_stream(spark, sf_dir).select("user_id", "event_id", "ts")
     every_n = _EVERY_N
 
@@ -170,7 +171,8 @@ def q_stream_tws_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    drained = run_to_memory(milestones, "append", sf_dir)
+    with conf_scope(spark, ROCKSDB_PROVIDER_CONF, ROCKSDB_PROVIDER_CLASS):
+        drained = run_to_memory(milestones, "append", sf_dir)
     return drained.select("user_id", "milestone_n", "ts").orderBy(
         "user_id", "milestone_n"
     )

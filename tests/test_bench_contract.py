@@ -20,24 +20,10 @@ _LINE_BUDGET = 1800
 
 
 def _worst_case_payload() -> dict:
-    # Widest realistic rendering: every median "999.999" (7 chars), every
-    # subtotal too.
+    # Widest realistic rendering: every median "999.999" (7 chars) and a
+    # four-digit scale factor.
     medians = {name: 999.999 for name in bench.HEADLINE}
-    return {
-        "metric": "headline_wall_sec",
-        "value": 99999.999,
-        "unit": "sec",
-        "queries": medians,
-        "sf": 1000.0,
-        "r3_comparable_7q_sec": 99999.999,
-        "r6_comparable_10q_sec": 99999.999,
-        "r8_comparable_11q_sec": 99999.999,
-        "r9_comparable_12q_sec": 99999.999,
-        "r9_comparable_13q_sec": 99999.999,
-        "r9_comparable_14q_sec": 99999.999,
-        "r9_comparable_15q_sec": 99999.999,
-        "r10_comparable_16q_sec": 99999.999,
-    }
+    return bench._payload(medians, 1000.0)
 
 
 def test_printed_line_fits_driver_tail_capture():

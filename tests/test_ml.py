@@ -25,6 +25,47 @@ def test_minhash_recall_vs_exact_jaccard(spark, sf_dir):
     assert recall >= 0.8, f"MinHashLSH recall {recall:.3f} < 0.8"
 
 
+def test_minhash_lsh_lowering_equals_approx_similarity_join(spark, sf_dir):
+    """The hand-lowered join around the MinHashLSH model must emit exactly
+    MLlib's own ``approxSimilarityJoin(feats, feats, 0.5)`` on the same
+    fitted model: the same ``doc_a < doc_b`` pair set with the same
+    ``jaccard_est``. The key is oracle-less, so this is its equivalence pin."""
+    from pyspark.ml.feature import CountVectorizer, MinHashLSH, Tokenizer
+    from pyspark.sql import functions as F
+
+    from recommendersystems_bigdata_spark.catalog import load_table
+
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard_est
+        for r in registry.QUERIES["q_dedup_minhash_lsh"](spark, sf_dir).collect()
+    }
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    tokens = Tokenizer(inputCol="text", outputCol="tokens").transform(docs)
+    cv = CountVectorizer(inputCol="tokens", outputCol="features", binary=True).fit(tokens)
+    feats = cv.transform(tokens).select("doc_id", "features")
+    mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=5, seed=42).fit(
+        feats
+    )
+    ref = (
+        mh.approxSimilarityJoin(feats, feats, 0.5, distCol="jaccard_dist")
+        .filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
+        .select(
+            F.col("datasetA.doc_id").alias("doc_a"),
+            F.col("datasetB.doc_id").alias("doc_b"),
+            F.round(F.lit(1.0) - F.col("jaccard_dist"), 6).alias("jaccard_est"),
+        )
+    )
+    want = {(r.doc_a, r.doc_b): r.jaccard_est for r in ref.collect()}
+
+    assert want, "approxSimilarityJoin found no pairs"
+    assert got.keys() == want.keys(), (
+        f"lowering-only: {len(got.keys() - want.keys())}, "
+        f"MLlib-only: {len(want.keys() - got.keys())}"
+    )
+    diff = [k for k in want if got[k] != want[k]]
+    assert not diff, f"{len(diff)} pairs differ in jaccard_est, e.g. {diff[:3]}"
+
 def test_ann_lsh_recall_vs_exact_cosine(spark, sf_dir):
     """BucketedRandomProjectionLSH top-5 vs exact cosine top-5.
 

@@ -370,6 +370,7 @@ def test_stateful_queries_under_rocksdb_state_store(spark, sf_dir, key):
     from recommendersystems_bigdata_spark.session import (
         ROCKSDB_PROVIDER_CLASS,
         ROCKSDB_PROVIDER_CONF,
+        conf_scope,
     )
 
     registry.load_all()
@@ -381,20 +382,34 @@ def test_stateful_queries_under_rocksdb_state_store(spark, sf_dir, key):
     baseline = rows(fn(spark, sf_dir))
     assert baseline, f"{key}: baseline stream emitted nothing"
 
-    saved = spark.conf.get(ROCKSDB_PROVIDER_CONF, None)
-    try:
-        spark.conf.set(ROCKSDB_PROVIDER_CONF, ROCKSDB_PROVIDER_CLASS)
+    with conf_scope(spark, ROCKSDB_PROVIDER_CONF, ROCKSDB_PROVIDER_CLASS):
         under_rocksdb = rows(fn(spark, sf_dir))
-    finally:
-        if saved is None:
-            spark.conf.unset(ROCKSDB_PROVIDER_CONF)
-        else:
-            spark.conf.set(ROCKSDB_PROVIDER_CONF, saved)
 
     assert under_rocksdb == baseline, (
         f"{key}: RocksDB state store changed the emitted set "
         f"({len(baseline)} vs {len(under_rocksdb)} rows)"
     )
+
+
+def test_tws_milestones_leaves_state_store_provider_unset(spark, sf_dir):
+    """q_stream_tws_milestones drains on RocksDB, but only for its own
+    query: the provider must not outlive the call on a shared session, or
+    every later stateful drain there silently switches state stores."""
+    from recommendersystems_bigdata_spark.session import ROCKSDB_PROVIDER_CONF
+    from recommendersystems_bigdata_spark.streaming.stream_state import (
+        q_stream_tws_milestones,
+    )
+
+    saved = spark.conf.get(ROCKSDB_PROVIDER_CONF, None)
+    spark.conf.unset(ROCKSDB_PROVIDER_CONF)
+    try:
+        assert q_stream_tws_milestones(spark, sf_dir).count() > 0
+        assert spark.conf.get(ROCKSDB_PROVIDER_CONF, None) is None
+    finally:
+        if saved is None:
+            spark.conf.unset(ROCKSDB_PROVIDER_CONF)
+        else:
+            spark.conf.set(ROCKSDB_PROVIDER_CONF, saved)
 
 
 # --- state-partition count of the availableNow drains ------------------------
